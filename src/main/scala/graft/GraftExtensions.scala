@@ -16,6 +16,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (FunctionIdentifier(CosineSimilarity.name),
         CosineSimilarity.info,
         CosineSimilarity.builder))
+    // every graft read plans as Spark's native parquet scan over the
+    // pinned manifest (no session can read a graft table without it)
+    ext.injectPlannerStrategy(graft.plans.GraftScanStrategy.apply)
+    // a final ORDER BY over a small measured result sorts in one task
+    ext.injectRuntimeOptimizerRule(graft.plans.SmallFinalSort.apply)
     // COUNT(*) over a graft relation answers from the manifest ledger
     ext.injectOptimizerRule(graft.plans.MetadataOnlyCount.apply)
     // the ledger's exact row count reaches Catalyst statistics (CBO

@@ -12,18 +12,22 @@ object Tables {
   /** Parquet schema inference reads footers on the DRIVER on every
     * `spark.read.parquet` call — measured ~50 ms per call (r18
     * MicroBench: 85 ms scan-with-inference vs 34 ms with an explicit
-    * schema). The corpus directories are immutable for the life of a
-    * process, so the inferred schema is cached per path and every
-    * later read passes it explicitly. The first read still infers, so
-    * session semantics (nanosAsLong, NTZ inference off) are baked into
-    * the cached schema exactly as before.
+    * schema). The inferred schema is cached per (path, mtime) and every
+    * later read passes it explicitly; a corpus rewritten at the same
+    * path gets a new mtime and is inferred afresh. The first read still
+    * infers, so session semantics (nanosAsLong, NTZ inference off) are
+    * baked into the cached schema exactly as before.
     */
   private val schemaCache = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.types.StructType]
+    .empty[(String, Long), org.apache.spark.sql.types.StructType]
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val p = s"$sfDir/$name.parquet"
-    val sch = schemaCache.getOrElseUpdate(p, spark.read.parquet(p).schema)
+    val path = new org.apache.hadoop.fs.Path(p)
+    val mtime = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(path).getModificationTime
+    if (schemaCache.size > 4096) schemaCache.clear()
+    val sch = schemaCache.getOrElseUpdate((p, mtime), spark.read.parquet(p).schema)
     spark.read.schema(sch).parquet(p)
   }
 

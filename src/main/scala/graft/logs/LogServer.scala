@@ -47,12 +47,15 @@ final class LogServer(fct: () => DataFrame, port: Int = 0) {
       case c => c.toString
     }
 
-  private def respond(x: HttpExchange, code: Int, body: String): Unit = {
+  private def respond(x: HttpExchange, code: Int, body: String,
+                      contentType: String = "application/json"): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
-    x.getResponseHeaders.set("Content-Type", "application/json")
+    x.getResponseHeaders.set("Content-Type", contentType)
     x.sendResponseHeaders(code, bytes.length.toLong)
     try x.getResponseBody.write(bytes) finally x.close()
   }
+
+  private val Html = "text/html; charset=utf-8"
 
   private def params(x: HttpExchange): Map[String, String] =
     Option(x.getRequestURI.getRawQuery).fold(Map.empty[String, String]) { q =>
@@ -64,11 +67,13 @@ final class LogServer(fct: () => DataFrame, port: Int = 0) {
       }.toMap
     }
 
-  /** 400 on validation failures, 500 on anything else — the
-    * reference's exception mapping.
+  /** `body` as a 200 of `contentType`; 400 (JSON) on validation
+    * failures, 500 on anything else — the reference's exception
+    * mapping.
     */
-  private def serve(x: HttpExchange)(body: => String): Unit =
-    try respond(x, 200, body)
+  private def serve(x: HttpExchange, contentType: String = "application/json")
+                   (body: => String): Unit =
+    try respond(x, 200, body, contentType)
     catch {
       case e: IllegalArgumentException =>
         // String.valueOf: a null-message exception must not NPE inside
@@ -114,21 +119,24 @@ final class LogServer(fct: () => DataFrame, port: Int = 0) {
     * %), the per-hour bar chart (inline SVG — no JS, no asset
     * dependencies), and the hourly breakdown table. Same queries the
     * JSON endpoints serve, same `?date=` contract (defaults to the
-    * newest available date, the Streamlit selectbox's default).
+    * newest available date, the Streamlit selectbox's default). The
+    * fact is resolved ONCE per page, so every tile, bar and row comes
+    * from the same snapshot even when a commit lands mid-request.
     */
   private def dashboardHtml(date0: Option[String]): String = {
-    val dates = LogQueries.availableDates(fct()).collect()
+    val snapshot = fct()
+    val dates = LogQueries.availableDates(snapshot).collect()
       .map(_.getAs[java.sql.Date]("date").toString)
     require(dates.nonEmpty, "no dates in the hourly fact")
     val date = date0.getOrElse(dates.last)
-    val kpi = LogQueries.kpiTotals(fct(), date).collect().head
+    val kpi = LogQueries.kpiTotals(snapshot, date).collect().head
     val (nReq, nErr) = (kpi.getAs[Long]("total_requests"),
       kpi.getAs[Long]("total_errors"))
     val ratePct = f"${kpi.getAs[Double]("error_rate_pct")}%.2f"
-    val hours = LogQueries.perHourPivot(fct(), date).collect().map(r =>
+    val hours = LogQueries.perHourPivot(snapshot, date).collect().map(r =>
       (r.getAs[String]("hour"), r.getAs[Long]("requests"),
         r.getAs[Long]("errors")))
-    val breakdown = LogQueries.hourlyBreakdown(fct(), date).collect()
+    val breakdown = LogQueries.hourlyBreakdown(snapshot, date).collect()
     def escH(s: String): String = s.replace("&", "&amp;")
       .replace("<", "&lt;").replace(">", "&gt;").replace("\"", "&quot;")
     // a well-formed date with no rows renders an empty chart/table —
@@ -168,18 +176,7 @@ final class LogServer(fct: () => DataFrame, port: Int = 0) {
   }
 
   server.createContext("/dashboard", (x: HttpExchange) =>
-    try {
-      val body = dashboardHtml(params(x).get("date"))
-      val bytes = body.getBytes(StandardCharsets.UTF_8)
-      x.getResponseHeaders.set("Content-Type", "text/html; charset=utf-8")
-      x.sendResponseHeaders(200, bytes.length.toLong)
-      try x.getResponseBody.write(bytes) finally x.close()
-    } catch {
-      case e: IllegalArgumentException =>
-        respond(x, 400, s"""{"detail":"${esc(String.valueOf(e.getMessage))}"}""")
-      case scala.util.control.NonFatal(e) =>
-        respond(x, 500, s"""{"detail":"${esc(String.valueOf(e.getMessage))}"}""")
-    })
+    serve(x, Html)(dashboardHtml(params(x).get("date"))))
 
   /** The dbt-docs lineage twin (`README.md:180-184`: `dbt docs serve`,
     * "view lineage (staging → dimensions → fact)") — the last
@@ -235,12 +232,8 @@ final class LogServer(fct: () => DataFrame, port: Int = 0) {
        |</body></html>""".stripMargin
   }
 
-  server.createContext("/lineage", (x: HttpExchange) => {
-    val bytes = lineageHtml.getBytes(StandardCharsets.UTF_8)
-    x.getResponseHeaders.set("Content-Type", "text/html; charset=utf-8")
-    x.sendResponseHeaders(200, bytes.length.toLong)
-    try x.getResponseBody.write(bytes) finally x.close()
-  })
+  server.createContext("/lineage", (x: HttpExchange) =>
+    serve(x, Html)(lineageHtml))
 
   server.createContext("/", (x: HttpExchange) =>
     respond(x, 404, """{"detail":"not found"}"""))

@@ -48,32 +48,6 @@ object Dedup {
   /** Word tokens of `text`. */
   private def tokens: Column = split(col("text"), " ")
 
-  /** Hash-repartition `docs` by doc_id for the token/shingle hashing
-    * stages. Default: AQE-coalesced width (`repartition(doc_id)` with
-    * no explicit count) — the r17 shape. r18 widened this to an
-    * explicit cores-scaled count (`graft.shingle.partitionsPerCore`,
-    * then-default 2) on warm solo A/Bs, but the driver's cold-JVM
-    * in-suite bench refuted it at local[32]: every caller regressed
-    * (d6 1.96→21.7 s, d11 2.32→20.5 s) — the extra partitions
-    * multiply per-task fixed costs and localCheckpoint block churn
-    * across the whole downstream family instead of buying parallel
-    * hashing. The conf remains as an explicit cluster-tuning knob
-    * (>0 ⇒ defaultParallelism × perCore partitions), default OFF.
-    */
-  private def widenByDoc(docs: DataFrame): DataFrame = {
-    val sc = docs.sparkSession.sparkContext
-    val key = "graft.shingle.partitionsPerCore"
-    val raw = docs.sparkSession.conf.getOption(key)
-    val perCore = try raw.map(_.trim.toInt).getOrElse(0)
-    catch {
-      case e: NumberFormatException => throw new IllegalArgumentException(
-        s"malformed $key = '${raw.get}' (expected an integer)", e)
-    }
-    if (perCore > 0)
-      docs.repartition(sc.defaultParallelism * perCore, col("doc_id"))
-    else docs.repartition(col("doc_id"))
-  }
-
   /** Exact dedup: one representative (min doc_id) per distinct text.
     * dropDuplicates("text") picks an arbitrary survivor; min(doc_id) is
     * the deterministic equivalent (same set of survivors, stable choice).
@@ -217,19 +191,12 @@ object Dedup {
     * below reuse this frame 3-4×, and Spark self-joins re-execute
     * shared lineage without a materialization.
     */
-  /** `wide = false` keeps the pre-r18 AQE-coalesced repartition — the
-    * incremental loops ([[d10IncrementalLsh]]) shingle SMALL per-step
-    * batches through MANY repeated stages, where a cores-scaled width
-    * multiplies per-task fixed costs instead of buying parallel
-    * hashing (measured: d10 total task time 7 s → 68 s from the widen
-    * with no wall win); one-shot full-table callers keep `wide`.
-    */
-  private def hashedShingles(docs: DataFrame, n: Int,
-                             wide: Boolean = true): DataFrame = {
+  private def hashedShingles(docs: DataFrame, n: Int): DataFrame = {
     val byDoc = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("pos")
-    val toks = (if (wide) widenByDoc(docs)
-                else docs.repartition(col("doc_id")))
+    // no explicit count: AQE coalesces the width; a cores-scaled count
+    // multiplies per-task fixed costs across the downstream stages
+    val toks = docs.repartition(col("doc_id"))
       .select(col("doc_id"), posexplode(tokens).as(Seq("pos", "tok")))
     val withNext = (1 until n).foldLeft(toks)((df, o) =>
       df.withColumn(s"t_$o", lead(col("tok"), o).over(byDoc)))
@@ -341,7 +308,7 @@ object Dedup {
     var shSeen = List.empty[DataFrame] // retained shingle checkpoints
     val stepPairs = (0L until nBatches).map { v =>
       val batch = Snapshots.readChanges(s, lakeDir, v - 1, v)
-      val shNew = hashedShingles(batch, 2, wide = false)
+      val shNew = hashedShingles(batch, 2)
       val sigs = minhashSigs(shNew, 12)
       val bandsNew = bandKeys(sigs, 12, 3)
       val within = bandsNew.as("a")

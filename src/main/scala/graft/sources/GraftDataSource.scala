@@ -1,9 +1,12 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, Row, SQLContext}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.SQLContext
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, AttributeSet, EqualTo, Expression, GetStructField, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 
@@ -22,23 +25,29 @@ import org.apache.spark.sql.types.StructType
   * and executes against one immutable snapshot — concurrent commits
   * never tear a running query (snapshot isolation end-to-end).
   *
-  * Built on the stable V1 source API ([[PrunedFilteredScan]]) rather
-  * than DSv2: V1 lets the scan BE a Spark parquet plan over the
-  * manifest's (pruned) file list — vectorized reading, codegen, and
-  * row-group pushdown all come from the parquet source underneath,
-  * and the relation adds exactly what the manifest knows: schema in
-  * O(1), deletion-vector masking, and file pruning from the pushed
-  * filters (bucket ∧ min/max stats ∧ bloom via
-  * [[Snapshots.readVersionFiltered]]). A bespoke DSv2
-  * PartitionReader would re-implement parquet IO row-by-row and lose
-  * the vectorized path. Scale shape: planning is O(manifest), the
-  * scan is O(surviving files); a point lookup on a bucketed+bloomed
-  * 100 TB table reads a handful of files.
+  * The relation is a plain V1 [[BaseRelation]]: optimizer rules see
+  * one `LogicalRelation` per pinned snapshot (the ledger COUNT, CBO
+  * stats, SQL DML and the aligned rewrites all match it), and
+  * [[graft.plans.GraftScanStrategy]] plans it as Spark's own
+  * `FileSourceScanExec` over a [[ManifestFileIndex]] — the manifest's
+  * file list and byte ledger, pruned by the scan's pushed data filters
+  * (bucket ∧ min/max stats ∧ bloom ∧ null counts, the same
+  * [[Snapshots.pruneByFilters]] `readVersionFiltered` uses).
+  * Vectorized reading, codegen, row-group pushdown and the scan's
+  * SQLMetrics come from the parquet source itself; the relation adds
+  * what the manifest knows: schema in O(1), file lengths without a
+  * listing, deletion-vector masking (a left-anti join on
+  * `_metadata.file_path`/`row_index`) and column mapping (an alias
+  * projection). `EXPLAIN` shows `FileScan parquet ... Location:
+  * ManifestFileIndex[...]` with its `PushedFilters`. Scale shape:
+  * planning is O(manifest) with zero filesystem calls, the scan is
+  * O(surviving files); a point lookup on a bucketed+bloomed 100 TB
+  * table reads a handful of files.
   *
-  * All filters are also declared unhandled, so Spark re-applies them
-  * row-level above the scan AND they are pushed into the inner
-  * parquet plan ([[GraftRelation.buildScan]]) — pruning can never
-  * change results, only skip files.
+  * Pruning only skips files: the filters stay above the scan, so
+  * results are exact whatever the manifest can prove. Reading needs
+  * the [[graft.GraftExtensions]] session extension, which installs
+  * the strategy.
   */
 class GraftSource extends RelationProvider with CreatableRelationProvider
     with DataSourceRegister with StreamSourceProvider
@@ -362,14 +371,13 @@ object GraftSource {
   }
 }
 
-/** One immutable snapshot of one table, served through the V1 scan
-  * contract. `needConversion = false`: the scan returns the inner
-  * parquet plan's InternalRows directly (the JDBC-relation pattern),
-  * no external-row round trip.
+/** One immutable snapshot of one table. Scanned through
+  * [[scanPlan]] (planned by [[graft.plans.GraftScanStrategy]]), not a
+  * V1 scan interface.
   */
 final case class GraftRelation(ctx: SQLContext, tableDir: String,
                                version: Long)
-    extends BaseRelation with PrunedFilteredScan with InsertableRelation {
+    extends BaseRelation with InsertableRelation {
 
   private def spark = ctx.sparkSession
 
@@ -377,8 +385,6 @@ final case class GraftRelation(ctx: SQLContext, tableDir: String,
     Snapshots.liveManifest(spark, tableDir, version)
 
   override def sqlContext: SQLContext = ctx
-
-  override val needConversion: Boolean = false
 
   /** Exact plan-time size from the manifest's per-file byte ledger
     * (zero filesystem calls): what lets Catalyst auto-broadcast a
@@ -491,16 +497,10 @@ final case class GraftRelation(ctx: SQLContext, tableDir: String,
       new Path(tableDir, manifest.files.head).toString).schema
   }
 
-  /** Everything is unhandled: pruning only skips files, Spark keeps
-    * the exact row-level semantics (and the same filters also reach
-    * the inner parquet scan as PushedFilters, see [[buildScan]]).
-    */
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] = filters
-
   /** `INSERT INTO t SELECT ...` / `INSERT OVERWRITE t ...` against a
     * `USING graft` view: one atomic snapshot commit (CHECKs, schema
     * evolution, txn carry all apply). The SQL write half of the
-    * serving surface — with [[buildScan]] a SQL-only user has the full
+    * serving surface — with the scan a SQL-only user has the full
     * read/write loop. Readers pinned to this relation's `version`
     * keep serving it (snapshot isolation); re-create the view (or a
     * new reader) to see the insert.
@@ -510,44 +510,98 @@ final case class GraftRelation(ctx: SQLContext, tableDir: String,
     Snapshots.commit(data, tableDir, if (overwrite) "overwrite" else "append")
   }
 
-  override def buildScan(requiredColumns: Array[String],
-                         filters: Array[Filter]): RDD[Row] = {
-    val base = Snapshots.readVersionFiltered(
-      spark, tableDir, manifest, filters.toIndexedSeq)
-    // push the row-level filters into the inner plan too: they reach
-    // the parquet scan (PushedFilters / row-group pruning) instead of
-    // only running above the relation
-    val cond = filters.flatMap(GraftRelation.toColumn).reduceOption(_ && _)
-    val filtered = cond.fold(base)(base.where)
-    val projected =
-      filtered.select(requiredColumns.toIndexedSeq.map(col): _*)
-    projected.queryExecution.toRdd.asInstanceOf[RDD[Row]]
-  }
-}
-
-object GraftRelation {
-  /** V1 filter → Column, for pushing into the inner parquet plan.
-    * Unconvertible filters are simply not pushed (Spark re-applies
-    * everything above the relation anyway).
+  /** The table dir qualified the way a listing reports it, so
+    * `_metadata.file_path` of a scanned file matches the deletion
+    * vectors' keys.
     */
-  private[sources] def toColumn(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v)            => Some(col(a) === lit(v))
-    case EqualNullSafe(a, v)      => Some(col(a) <=> lit(v))
-    case GreaterThan(a, v)        => Some(col(a) > lit(v))
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case LessThan(a, v)           => Some(col(a) < lit(v))
-    case LessThanOrEqual(a, v)    => Some(col(a) <= lit(v))
-    case In(a, vs)                => Some(col(a).isin(vs.toIndexedSeq: _*))
-    case IsNull(a)                => Some(col(a).isNull)
-    case IsNotNull(a)             => Some(col(a).isNotNull)
-    case And(l, r) =>
-      for { lc <- toColumn(l); rc <- toColumn(r) } yield lc && rc
-    case Or(l, r) =>
-      for { lc <- toColumn(l); rc <- toColumn(r) } yield lc || rc
-    case Not(c)                   => toColumn(c).map(!_)
-    case StringStartsWith(a, v)   => Some(col(a).startsWith(v))
-    case StringEndsWith(a, v)     => Some(col(a).endsWith(v))
-    case StringContains(a, v)     => Some(col(a).contains(v))
-    case _                        => None
+  @transient private lazy val root: Path = {
+    val dir = new Path(tableDir)
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(dir)
+  }
+
+  /** Each data file's status for the [[ManifestFileIndex]]: length
+    * from the byte ledger (no filesystem call; only files predating
+    * byte accounting are stat'ed).
+    */
+  @transient private lazy val statusOf: Map[String, FileStatus] = {
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    manifest.files.iterator.map { rel =>
+      val p = new Path(root, rel)
+      rel -> manifest.fileBytes.get(rel).fold(fs.getFileStatus(p))(len =>
+        new FileStatus(len, false, 0, 0, 0, p))
+    }.toMap
+  }
+
+  /** The deletion-vector files' statuses (a few, stat'ed once). */
+  @transient private lazy val dvFiles: Seq[FileStatus] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    Snapshots.dvPaths(tableDir, manifest).map { s =>
+      val p = new Path(s)
+      p.getFileSystem(conf).getFileStatus(p)
+    }
+  }
+
+  /** This snapshot as a logical plan over Spark's native parquet scan,
+    * standing in for `Project(projects, Filter(filters, relation))`
+    * where `output` is the relation's attributes (the planner's
+    * [[graft.plans.GraftScanStrategy]] plans the result):
+    *   - a `HadoopFsRelation` over [[ManifestFileIndex]] reads the
+    *     PHYSICAL columns; its `listFiles` prunes with the pushed data
+    *     filters renamed to logical names ([[Snapshots.pruneByFilters]]);
+    *   - an alias projection restores the logical names under
+    *     `output`'s exprIds, so everything above stays bound;
+    *   - with deletion vectors, a left-anti join on
+    *     (`_metadata.file_path`, `_metadata.row_index`) masks deleted
+    *     rows — broadcast while the mask fits
+    *     `spark.sql.autoBroadcastJoinThreshold`, the same plan
+    *     `readVersionFiltered` builds. `filters` stay below the join,
+    *     on the scan, so they still prune and push.
+    */
+  private[graft] def scanPlan(output: Seq[Attribute],
+                              projects: Seq[NamedExpression],
+                              filters: Seq[Expression]): LogicalPlan = {
+    val m = manifest
+    val index = new ManifestFileIndex(root, m.files.map(statusOf),
+      dataFilters => {
+        val pushed = dataFilters.flatMap(e =>
+          org.apache.spark.sql.graftbridge.Bridge.translateFilter(
+            e.transform { case a: AttributeReference =>
+              a.withName(m.logicalOf.getOrElse(a.name, a.name)) }))
+        Snapshots.pruneByFilters(spark, m, pushed).map(statusOf)
+      })
+    val physical = StructType(schema.fields.map(f =>
+      f.copy(name = m.physOf(f.name), nullable = true)))
+    val scan = LogicalRelation(HadoopFsRelation(index, new StructType(),
+      physical, None, new ParquetFileFormat, Map.empty)(spark))
+    val needed = AttributeSet(projects ++ filters)
+    val renamed = output.zip(scan.output).collect {
+      case (a, p) if needed.contains(a) =>
+        Alias(p, a.name)(exprId = a.exprId)
+    }
+    def filtered(child: LogicalPlan): LogicalPlan =
+      filters.reduceOption(And).fold(child)(Filter(_, child))
+    val rows =
+      if (m.dvs.isEmpty) filtered(Project(renamed, scan))
+      else {
+        Snapshots.warnIfPurgeOverdue(spark, tableDir, m)
+        val meta = scan.metadataOutput.head
+        val metaType = meta.dataType.asInstanceOf[StructType]
+        def metaField(n: String) =
+          Alias(GetStructField(meta, metaType.fieldIndex(n), Some(n)), n)()
+        val (fp, ri) = (metaField("file_path"), metaField("row_index"))
+        val dv = LogicalRelation(HadoopFsRelation(
+          new ManifestFileIndex(root, dvFiles, _ => dvFiles),
+          new StructType(), Snapshots.DvSchema, None, new ParquetFileFormat,
+          Map.empty)(spark))
+        val Seq(dvFile, dvRow) = dv.output
+        Join(
+          filtered(Project(renamed :+ fp :+ ri,
+            scan.copy(output = scan.output :+ meta))),
+          dv, LeftAnti,
+          Some(And(EqualTo(fp.toAttribute, dvFile),
+            EqualTo(ri.toAttribute, dvRow))),
+          JoinHint.NONE)
+      }
+    Project(projects, rows)
   }
 }

@@ -6582,11 +6582,17 @@ object Snapshots {
     * explicitly and skip parquet schema inference (a ~50 ms driver
     * footer pass PER READ — r18 MicroBench).
     */
-  private val DvSchema = org.apache.spark.sql.types.StructType(Seq(
+  private[sources] val DvSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("file_path",
       org.apache.spark.sql.types.StringType),
     org.apache.spark.sql.types.StructField("row_index",
       org.apache.spark.sql.types.LongType)))
+
+  /** Absolute paths of `m`'s dv files: relative refs live under
+    * `tableDir` (`dv/`), absolute ones are clone-borrowed.
+    */
+  private[sources] def dvPaths(tableDir: String, m: Manifest): Seq[String] =
+    m.dvs.map(rel => if (isBorrowed(rel)) rel else new Path(tableDir, rel).toString)
 
   /** `spark.read.parquet` for dv files with the static [[DvSchema]]. */
   private def readDvs(spark: SparkSession, paths: Seq[String]): DataFrame =
@@ -6609,7 +6615,7 @@ object Snapshots {
     * Metadata-only — reads proceed unchanged; tables whose manifests
     * predate row accounting (dvRows = -1) stay silent.
     */
-  private def warnIfPurgeOverdue(spark: SparkSession, tableDir: String,
+  private[sources] def warnIfPurgeOverdue(spark: SparkSession, tableDir: String,
                                  m: Manifest): Unit = {
     // masks below graft.dv.purgeWarnMinRows (default 1024) never warn:
     // at trivial sizes the ratio says nothing and a purge buys nothing
@@ -6693,8 +6699,7 @@ object Snapshots {
     if (m.dvs.isEmpty) base
     else {
       warnIfPurgeOverdue(spark, tableDir, m)
-      val dvAbs = m.dvs.map(rel =>
-        if (isBorrowed(rel)) rel else new Path(tableDir, rel).toString)
+      val dvAbs = dvPaths(tableDir, m)
       val dv = readDvs(spark, dvAbs)
       base.join(dv,
         base(FpCol) === dv("file_path") && base(RiCol) === dv("row_index"),
@@ -7664,8 +7669,7 @@ object Snapshots {
     if (m.dvs.isEmpty) // metadata-only: every segment carried verbatim
       return Some(publishDeltaOr(())(
         m.copy(version = version, pendingMarker = None), Map.empty, Nil))
-    val dvAbs = m.dvs.map(rel =>
-      if (isBorrowed(rel)) rel else new Path(tableDir, rel).toString)
+    val dvAbs = dvPaths(tableDir, m)
     val maskedTails = readDvs(spark, dvAbs)
       .select(regexp_extract(col("file_path"), DataTailRe, 1).as("t"))
       .distinct().collect().map(_.getString(0)).toSet
@@ -7737,8 +7741,7 @@ object Snapshots {
     // URI — match manifest rels on the URI tail (uuid-unique commit
     // dirs; spans the `k=v/` segments; matches borrowed absolute refs
     // the same way — see [[compactSmall]])
-    val dvAbs = m.dvs.map(rel =>
-      if (isBorrowed(rel)) rel else new Path(tableDir, rel).toString)
+    val dvAbs = dvPaths(tableDir, m)
     // bounded collect: one row per DISTINCT masked file — the set
     // being rewritten, whose names the manifest already holds
     // driver-side anyway
@@ -8128,14 +8131,9 @@ object Snapshots {
       d.setScale(scale).unscaledValue().longValueExact()).toOption)
   }
 
-  /** The [[GraftRelation]] read path: `version`'s rows (deletion
-    * vectors applied) scanning only the files the pushed V1 filters
-    * cannot rule out. Top-level conjuncts prune: equality/IN through
-    * [[pruneForKeys]] (bucket ∧ stats ∧ bloom), one-sided ranges
-    * through footer stats; everything else (Or, Not, null tests,
-    * string matches) is left to the row-level filter the caller
-    * re-applies — pruning here is a scan reducer, never a row filter,
-    * exactly the parquet footer-pruning contract one level up.
+  /** `version`'s rows (deletion vectors applied) scanning only the
+    * files the V1 `filters` cannot rule out ([[pruneByFilters]]); the
+    * caller re-applies the filters row-level.
     */
   def readVersionFiltered(spark: SparkSession, tableDir: String,
                           version: Option[Long],
@@ -8144,13 +8142,28 @@ object Snapshots {
     readVersionFiltered(spark, tableDir,
       resolveForRead(spark, tableDir, version), filters)
 
-  /** Core of the above against an already-resolved manifest — the
-    * [[GraftRelation]] passes its cached one, so a scan does not
-    * re-read the manifest the relation already parsed.
-    */
+  /** Core of the above against an already-resolved manifest. */
   private[sources] def readVersionFiltered(spark: SparkSession,
       tableDir: String, m: Manifest,
       filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame = {
+    // all files pruned ⇒ no row can match; keep one file for the
+    // schema, the re-applied row filter returns empty
+    val keep = pruneByFilters(spark, m, filters)
+    readFiles(spark, tableDir, m, if (keep.nonEmpty) keep else m.files.take(1))
+  }
+
+  /** The files of `m` that pushed V1 `filters` (named by LOGICAL
+    * column) cannot rule out — shared by [[readVersionFiltered]] and
+    * the [[GraftRelation]] scan's [[ManifestFileIndex]]. Top-level
+    * conjuncts prune: equality/IN through [[pruneForKeys]] (bucket ∧
+    * stats ∧ bloom), one-sided ranges through footer stats, null tests
+    * through null counts; everything else (Or, Not, string matches) is
+    * left to the row-level filter the caller re-applies — pruning is a
+    * scan reducer, never a row filter, exactly the parquet
+    * footer-pruning contract one level up. May return no file.
+    */
+  private[sources] def pruneByFilters(spark: SparkSession, m: Manifest,
+      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] = {
     import org.apache.spark.sql.sources._
     // RANGE predicates on decimal literals cannot be compared against
     // footer stats (the parquet footer records UNSCALED integers for
@@ -8190,10 +8203,7 @@ object Snapshots {
           m.fileRows.get(rel).contains(n)))
       case _ => () // residual-only: the row filter handles it exactly
     }
-    // all files pruned ⇒ no row can match; keep one file for the
-    // schema, the re-applied row filter returns empty
-    val keepNE = if (keep.nonEmpty) keep else m.files.take(1)
-    readFiles(spark, tableDir, m, keepNE)
+    keep
   }
 
   /** Re-cluster the latest version into the bucket layout (the
@@ -8248,8 +8258,7 @@ object Snapshots {
     import org.apache.spark.sql.functions.{col, regexp_extract}
     if (m.dvs.isEmpty) return (Seq.empty, 0L)
     val keptTails = kept.map(dataTail)
-    val dvAbs = m.dvs.map(rel =>
-      if (isBorrowed(rel)) rel else new Path(tableDir, rel).toString)
+    val dvAbs = dvPaths(tableDir, m)
     val live = readDvs(spark, dvAbs)
       .withColumn("__rel", regexp_extract(col("file_path"), DataTailRe, 1))
       .filter(col("__rel").isin(keptTails: _*)).drop("__rel")
@@ -8286,8 +8295,7 @@ object Snapshots {
                                       tag: String): (Seq[String], Long) = {
     import org.apache.spark.sql.functions.{col, regexp_extract}
     if (m.dvs.isEmpty) return (Seq.empty, 0L)
-    val dvAbs = m.dvs.map(rel =>
-      if (isBorrowed(rel)) rel else new Path(tableDir, rel).toString)
+    val dvAbs = dvPaths(tableDir, m)
     // isin compiles to an InSet hash probe past 10 values — O(1) per
     // row whatever the rewrite's size
     val live = readDvs(spark, dvAbs)

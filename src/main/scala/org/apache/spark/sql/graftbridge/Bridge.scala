@@ -14,6 +14,14 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A catalyst predicate as a V1 source filter (the sql-private
+    * `DataSourceStrategy.translateFilter`), when it has one — what a
+    * file index uses to prune with the filters a scan pushed.
+    */
+  def translateFilter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(e, supportNestedPredicatePushdown = false)
+
   /** A DataFrame over an already-analyzed logical plan (the
     * private[sql] `Dataset.ofRows`) — what a command that captured a
     * resolved sub-plan (e.g. a MERGE source) uses to re-enter the

@@ -102,6 +102,28 @@ class LogServerSpec extends SparkSpec {
     } finally { srv.stop(); fct.unpersist() }
   }
 
+  test("dashboard resolves the fact once: every number comes from one snapshot") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val fct = LogFixture.fct(spark).cache()
+    val date = fct.select("date").orderBy("date").head().get(0).toString
+    // each call is a newer "version": request counts scaled by the call number
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val srv = new LogServer(() => {
+      val n = calls.incrementAndGet()
+      fct.withColumn("requests", col("requests") * lit(n.toLong))
+    }).start()
+    try {
+      val (code, html) = get(srv.boundPort, s"/dashboard?date=$date")
+      assert(code === 200, html)
+      assert(calls.get === 1)
+      val kpi = LogQueries.kpiTotals(fct, date).collect().head
+      assert(html.contains(s"Requests: ${kpi.getAs[Long]("total_requests")}"))
+      LogQueries.hourlyBreakdown(fct, date).collect().foreach { r =>
+        assert(html.contains(s"<td>${r.getAs[Long]("requests")}</td>"))
+      }
+    } finally { srv.stop(); fct.unpersist() }
+  }
+
   test("lineage page declares the dbt-docs DAG: staging → dimensions → " +
     "fact → serving, one node box per model") {
     val fct = LogFixture.fct(spark).cache()
